@@ -161,6 +161,12 @@ class StreamSpec:
         if rgpf < 1:
             # ParquetSink.cs:63-66 enforces > 0.
             raise ValueError("rowGroupsPerFile must be a positive integer")
+        interval = parse_seconds(payload.get("changeCaptureIntervalSeconds", 15))
+        if interval < timedelta(milliseconds=1):
+            # the processing-time trigger has millisecond resolution; zero
+            # would make Spark poll without pause
+            raise ValueError(
+                "changeCaptureIntervalSeconds must be at least 0.001 seconds")
         resolver_cfg = payload.get("pageResolver")
         if resolver_cfg is None:
             resolver_cfg = payload.get("options", {}).get("pageResolver")
@@ -168,9 +174,7 @@ class StreamSpec:
             stream_id=stream_id or payload.get("streamId", "local-stream"),
             stream_kind=stream_kind or payload.get("streamKind", "generic"),
             backfill=payload.get("backfill", False) if backfill is None else backfill,
-            change_capture_interval=parse_seconds(
-                payload.get("changeCaptureIntervalSeconds", 15)
-            ),
+            change_capture_interval=interval,
             lookback_range=parse_seconds(payload.get("lookBackRangeSeconds", 86400)),
             stop_after_backfill=bool(payload.get("stopAfterBackfill", False)),
             row_groups_per_file=rgpf,

@@ -36,32 +36,50 @@ Options:
   snapshot with synthesized version 0, then the stream starts at 0)
 - ``unreadable_policy``  what an in-flight/truncated file does to the
   tick: ``hold`` (default — consume the feed only up to the first
-  unreadable file, never committing past it; see ``_feed_rows``) or
+  unreadable file, never committing past it; see ``_feed_batches``) or
   ``fail`` (raise, for feeds where truncation means corruption)
 
-Driver-side reads use pyarrow directly (a SimpleDataSourceStreamReader
+``read``/``readBetweenOffsets`` return ``pyarrow.RecordBatch``es read with
+pyarrow directly, which Spark's Python source runner forwards as-is: no
+change row becomes a Python object (the one exception: a zone-less
+timestamp under a ``TIMESTAMP`` field, when the runner's zone is not UTC,
+is shifted per value, as Spark's row conversion does; see ``_conform``).
+A SimpleDataSourceStreamReader still
 prefetches on the driver by design — per-tick deltas are version-bounded
 and small; the 100 TB table itself never flows through this source, only
-its change rows, exactly like the reference's CHANGETABLE scans).
+its change rows, exactly like the reference's CHANGETABLE scans. Spark
+starts a fresh Python runner per query start, so this module keeps its
+import set lean: no ``pyarrow.dataset`` (which imports pandas), and
+``pyarrow.compute`` only for a file that straddles the watermark or whose
+types differ from the schema.
 """
 
 from __future__ import annotations
 
 import os
+import time
 from collections.abc import Iterator
+from datetime import timezone
+from typing import TYPE_CHECKING
 
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from arcane_framework_spark.contracts.columns import SYS_CHANGE_VERSION
 
+if TYPE_CHECKING:
+    import pyarrow as pa
 
-def _footer_version_bounds(md, version_col: str):
-    """(min, max) of ``version_col`` from the parquet FOOTER row-group
-    statistics — no data pages touched. Returns None when any row group
-    lacks min/max stats (caller falls back to reading the column);
-    (None, None) for a zero-row-group file."""
+
+def _version_stats(pf, version_col: str) -> tuple[int | None, int | None, int]:
+    """(min, max, null count) of ``version_col`` in one parquet file, from
+    the FOOTER row-group statistics when every row group carries them (no
+    data pages touched), else from reading that one column. min/max are
+    None for a file without a non-null version (zero rows)."""
+    md = pf.metadata
     vmin = vmax = None
+    nulls = 0
     for rg in range(md.num_row_groups):
         row_group = md.row_group(rg)
         stats = None
@@ -70,18 +88,57 @@ def _footer_version_bounds(md, version_col: str):
             if col.path_in_schema == version_col:
                 stats = col.statistics
                 break
-        if stats is None or not stats.has_min_max:
-            return None
+        if stats is None or not stats.has_min_max or not stats.has_null_count:
+            break
         vmin = stats.min if vmin is None else min(vmin, stats.min)
         vmax = stats.max if vmax is None else max(vmax, stats.max)
-    return vmin, vmax
+        nulls += stats.null_count
+    else:  # every row group had stats
+        return vmin, vmax, nulls
+    import pyarrow.compute as pc  # stats absent: bound from the one column
+
+    versions = pf.read(columns=[version_col]).column(version_col)
+    bounds = pc.min_max(versions)
+    return bounds["min"].as_py(), bounds["max"].as_py(), versions.null_count
 
 
-def _feed_rows(path: str, version_col: str, schema_fields: list[str],
-               lo: int, hi: int | None,
-               unreadable_policy: str = "hold") -> tuple[list[tuple], int]:
+def _conform(table: pa.Table, schema: pa.Schema) -> pa.Table:
+    """``table`` as ``schema``, casting only the columns whose file type
+    differs (e.g. an int32 feed under a LONG field), with the values Spark's
+    row conversion gives: a timestamp is truncated to microseconds, and a
+    zone-less timestamp under a Spark ``TIMESTAMP`` field is wall time in
+    the runner's local zone."""
+    if table.schema.equals(schema):
+        return table
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    columns = []
+    for field, column in zip(schema, table.columns):
+        if (column.type != field.type and pa.types.is_timestamp(column.type)
+                and pa.types.is_timestamp(field.type)):
+            column = pc.cast(column, options=pc.CastOptions(
+                pa.timestamp("us", column.type.tz), allow_time_truncate=True))
+            if (column.type.tz is None and field.type.tz is not None
+                    and not time.timezone == time.altzone == 0):
+                # local wall time -> UTC per value, as datetime.astimezone
+                # does for the naive values of Spark's row path
+                column = pa.array([
+                    None if v is None else v.astimezone(timezone.utc)
+                    for v in column.to_pylist()
+                ], field.type)
+        columns.append(column.cast(field.type))
+    return pa.Table.from_arrays(columns, schema=schema)
+
+
+def _feed_batches(path: str, version_col: str, schema: pa.Schema, lo: int,
+                  hi: int | None, unreadable_policy: str = "hold",
+                  ) -> tuple[list[pa.RecordBatch], int]:
     """Rows with ``lo < version <= hi`` (hi=None: no upper bound) from the
-    parquet feed at ``path``; returns (tuples, max version seen overall).
+    parquet feed at ``path``, as Arrow record batches of ``schema``
+    (columns selected in its order, cast to its types where a file's
+    differ); returns (batches, max version seen overall). No empty
+    batch is returned, so ``not batches`` means an empty delta.
 
     Listing + filtering happens per call: the feed is append-only, so new
     files between calls are exactly the new deltas. Missing/empty dir is a
@@ -91,7 +148,11 @@ def _feed_rows(path: str, version_col: str, schema_fields: list[str],
     CHANGETABLE scans are delta-bounded too): each file's version range is
     read from its parquet footer statistics, and files entirely at or below
     the committed watermark (``max <= lo``) — i.e. the ever-growing history
-    — are skipped without touching their data pages.
+    — are skipped without touching their data pages. A delta file is read
+    through the ``ParquetFile`` already open for its footer, and the
+    version mask runs only on a file whose range straddles ``lo`` or
+    ``hi`` (or that holds NULL versions); columns whose file type differs
+    from ``schema`` go through ``_conform``.
 
     **Unreadable (in-flight / truncated) files stop the scan** — the feed
     is consumed as a PREFIX in filename order: rows and the watermark come
@@ -111,7 +172,6 @@ def _feed_rows(path: str, version_col: str, schema_fields: list[str],
     corruption rather than a writer mid-append.
     """
     import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     if not os.path.isdir(path):
@@ -121,46 +181,36 @@ def _feed_rows(path: str, version_col: str, schema_fields: list[str],
         for f in os.listdir(path)
         if f.endswith(".parquet")
     )
-    if not files:
-        return [], lo
-
     max_seen: int | None = None
-    candidates: list[str] = []
+    batches: list[pa.RecordBatch] = []
     for f in files:
         try:
             pf = pq.ParquetFile(f)
-            bounds = _footer_version_bounds(pf.metadata, version_col)
-            if bounds is None:  # stats absent: bound from the one column
-                versions = pf.read(columns=[version_col]).column(version_col)
-                fmin = pc.min(versions).as_py()
-                fmax = pc.max(versions).as_py()
-            else:
-                fmin, fmax = bounds
+            fmin, fmax, nulls = _version_stats(pf, version_col)
         except (OSError, pa.ArrowInvalid):
             if unreadable_policy == "fail":
                 raise
             break  # prefix rule: nothing at/after an in-flight file
-        if fmax is None:
-            continue  # zero-row file
-        max_seen = fmax if max_seen is None else max(max_seen, fmax)
-        if fmax <= lo:
-            continue  # fully below the watermark: committed history
-        if hi is not None and fmin > hi:
-            continue  # fully above a bounded replay range
-        candidates.append(f)
+        with pf:
+            if fmax is None:
+                continue  # zero-row file
+            max_seen = fmax if max_seen is None else max(max_seen, fmax)
+            if fmax <= lo:
+                continue  # fully below the watermark: committed history
+            if hi is not None and fmin > hi:
+                continue  # fully above a bounded replay range
+            table = pf.read(columns=schema.names)
+        if nulls or fmin <= lo or (hi is not None and fmax > hi):
+            import pyarrow.compute as pc  # only a straddling file needs it
 
-    if max_seen is None:
-        return [], lo
-    if not candidates:
-        return [], int(max_seen)
-    table = pq.ParquetDataset(candidates).read()
-    versions = table.column(version_col)
-    mask = pc.greater(versions, lo)
-    if hi is not None:
-        mask = pc.and_(mask, pc.less_equal(versions, hi))
-    picked = table.filter(mask)
-    cols = [picked.column(name).to_pylist() for name in schema_fields]
-    return list(zip(*cols)) if picked.num_rows else [], int(max_seen)
+            versions = table.column(version_col)
+            mask = pc.greater(versions, lo)
+            if hi is not None:
+                mask = pc.and_(mask, pc.less_equal(versions, hi))
+            table = table.filter(mask)
+        batches.extend(
+            b for b in _conform(table, schema).to_batches() if b.num_rows)
+    return batches, lo if max_seen is None else int(max_seen)
 
 
 class CtStreamReader(SimpleDataSourceStreamReader):
@@ -177,36 +227,37 @@ class CtStreamReader(SimpleDataSourceStreamReader):
                 "file; default) or 'fail' (raise on a truncated file), got "
                 f"{self.unreadable_policy!r}"
             )
-        self.schema_fields = [f.name for f in schema.fields]
-        if self.version_col not in self.schema_fields:
+        if self.version_col not in schema.fieldNames():
             raise ValueError(
                 f"schema must include the version column "
                 f"{self.version_col!r} (it IS the watermark)"
             )
+        self.arrow_schema = to_arrow_schema(schema)
 
     def initialOffset(self) -> dict:  # noqa: N802 (Spark API)
         return {"version": self.start_version}
 
     def read(self, start: dict) -> tuple:
-        lo = int(start["version"])
-        rows, max_seen = _feed_rows(
-            self.path, self.version_col, self.schema_fields, lo, None,
+        batches, max_seen = _feed_batches(
+            self.path, self.version_col, self.arrow_schema,
+            int(start["version"]), None,
             unreadable_policy=self.unreadable_policy,
         )
-        if not rows:
+        if not batches:
             return iter([]), start  # empty tick: watermark holds
-        return iter(rows), {"version": max_seen}
+        return iter(batches), {"version": max_seen}
 
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:  # noqa: N802
+    def readBetweenOffsets(self, start: dict, end: dict,  # noqa: N802
+                           ) -> Iterator[pa.RecordBatch]:
         # Deterministic replay of a committed range from the immutable
         # feed: version-bounded on BOTH sides, so rows appended after the
         # original read can never leak into a recovered batch.
-        rows, _ = _feed_rows(
-            self.path, self.version_col, self.schema_fields,
+        batches, _ = _feed_batches(
+            self.path, self.version_col, self.arrow_schema,
             int(start["version"]), int(end["version"]),
             unreadable_policy=self.unreadable_policy,
         )
-        return iter(rows)
+        return iter(batches)
 
 
 class CtDataSource(DataSource):

@@ -130,22 +130,23 @@ class StreamRunner:
 
         ``backfill=True`` → ``Trigger.availableNow`` (drain then stop — the
         reference's stopAfterBackfill, C10/T4); otherwise
-        ``Trigger.processingTime(trigger_interval)`` (T1).
+        ``Trigger.processingTime(trigger_interval)`` (T1), default 15 s, at
+        millisecond resolution; an interval under 1 ms raises ValueError
+        (Spark reads a zero interval as "poll without pause").
         ``on_finish(interrupted)`` runs after termination — the hook for the
         sink's COMPLETED-token write (suppressed when interrupted, T6/T9).
         """
+        if backfill:
+            trigger = {"availableNow": True}
+        else:
+            interval = (timedelta(seconds=15) if trigger_interval is None
+                        else trigger_interval)
+            trigger = {"processingTime": _processing_time(interval)}
         if self.install_signal_handlers:
             self._install_sigterm()
         writer = df.writeStream.foreachBatch(foreach_batch).option(
             "checkpointLocation", checkpoint_dir
-        )
-        if backfill:
-            writer = writer.trigger(availableNow=True)
-        else:
-            interval = trigger_interval or timedelta(seconds=15)
-            writer = writer.trigger(
-                processingTime=f"{int(interval.total_seconds())} seconds"
-            )
+        ).trigger(**trigger)
         try:
             self._query = writer.start()
             self._query.awaitTermination()
@@ -182,6 +183,17 @@ class StreamRunner:
         if self.interrupted:
             return RunResult(EXIT_RESTART, interrupted=True)
         return RunResult(EXIT_SUCCESS)
+
+
+def _processing_time(interval: timedelta) -> str:
+    """``Trigger.processingTime`` string for ``interval``, in whole
+    milliseconds."""
+    ms = interval // timedelta(milliseconds=1)
+    if ms <= 0:
+        raise ValueError(
+            f"trigger_interval must be at least 1 millisecond, got {interval!r}"
+        )
+    return f"{ms} milliseconds"
 
 
 def _unwrap(exc: BaseException) -> BaseException:

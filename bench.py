@@ -3,6 +3,8 @@
 Contract (driver): run headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and print
 ``{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}``.
+``$SPARK_GRAFT_CPUS`` defaults to the host's core count, and the line also
+states ``cpus``, ``master`` and ``sf_dir``.
 
 Each query is executed to completion via the ``noop`` sink (full pipeline
 runs distributed; nothing is collected to the driver), which is the honest
@@ -46,14 +48,46 @@ CORE_SUBSET = (
 )
 
 
+#: The bench harness keeps only the LAST ~2000 chars of stdout and parses
+#: the final JSON line from that window. With 70+ catalog queries the full dict
+#: overflows it (round 2's record came back "parsed": null), so the printed
+#: line keeps the slowest queries and trims the fast tail to stay under the
+#: window; BENCH_FULL.json carries everything.
+MAX_LINE = 1750
+
+
+def fit_line(payload: dict) -> str:
+    """``payload`` as one compact JSON line of at most ``MAX_LINE`` chars,
+    dropping the fastest entries of ``payload["queries"]`` (ordered slowest
+    first) and counting them in ``omitted_fast_queries``."""
+    ranked = list(payload["queries"].items())
+    n_queries = len(ranked)
+    line = json.dumps(payload, separators=(",", ":"))
+    while len(line) > MAX_LINE and len(ranked) > 1:
+        ranked.pop()
+        payload["queries"] = dict(ranked)  # keep descending-by-time ordering
+        payload["omitted_fast_queries"] = n_queries - len(ranked)
+        line = json.dumps(payload, separators=(",", ":"))
+    if len(line) > MAX_LINE:
+        # Last-resort fallback: summary fields only, never an unparseable line.
+        payload.pop("queries", None)
+        payload.pop("errors", None)
+        payload["omitted_fast_queries"] = n_queries
+        line = json.dumps(payload, separators=(",", ":"))
+    return line
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # unset: the host's core count, not a fixed local[32] that oversubscribes
+    # a small host
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
     from arcane_framework_spark.queries import QUERIES
     from arcane_framework_spark.session import get_spark
 
-    spark = get_spark("arcane-bench", master=f"local[{cpus}]")
+    master = f"local[{cpus}]"
+    spark = get_spark("arcane-bench", master=master)
     spark.sparkContext.setLogLevel("ERROR")
 
     try:
@@ -83,7 +117,7 @@ def main() -> None:
             for b in batches:
                 yield b
 
-        warm_df = spark.range(0, 256, 1, int(cpus))
+        warm_df = spark.range(0, 256, 1, cpus)
         warm_df.mapInPandas(_warm, warm_df.schema).write.format("noop").mode(
             "overwrite"
         ).save()
@@ -208,16 +242,11 @@ def main() -> None:
              "core_subset_median_total": core_subset_median_total,
              "n_core_present": len(CORE_SUBSET) - len(core_missing),
              "core_missing": core_missing,
-             "pass_totals": [round(sum(p.values()), 3) for p in passes]},
+             "pass_totals": [round(sum(p.values()), 3) for p in passes],
+             "cpus": cpus, "master": master, "sf_dir": sf_dir},
             fh, indent=1, sort_keys=True,
         )
 
-    # The driver captures only the LAST ~2000 chars of stdout and parses the
-    # final JSON line from that window. With 70+ catalog queries the full dict
-    # overflows it (round 2's record came back "parsed": null), so the printed
-    # line keeps the slowest queries and trims the fast tail to stay under the
-    # window; BENCH_FULL.json carries everything.
-    MAX_LINE = 1750
     ranked = sorted(timings.items(), key=lambda kv: -kv[1])
     payload = {
         "metric": "catalog_total_runtime",
@@ -234,21 +263,13 @@ def main() -> None:
         "core_missing": core_missing,
         "pass_totals": [round(sum(p.values()), 3) for p in passes],
         "full": "BENCH_FULL.json",
+        "cpus": cpus,
+        "master": master,
+        "sf_dir": sf_dir,
     }
     if errors:
         payload["errors"] = {k: v[:80] for k, v in errors.items()}
-    line = json.dumps(payload, separators=(",", ":"))
-    while len(line) > MAX_LINE and len(ranked) > 1:
-        ranked.pop()
-        payload["queries"] = dict(ranked)  # keep descending-by-time ordering
-        payload["omitted_fast_queries"] = len(timings) - len(ranked)
-        line = json.dumps(payload, separators=(",", ":"))
-    if len(line) > MAX_LINE:
-        # Last-resort fallback: summary fields only, never an unparseable line.
-        payload.pop("queries", None)
-        payload.pop("errors", None)
-        payload["omitted_fast_queries"] = len(timings)
-        line = json.dumps(payload, separators=(",", ":"))
+    line = fit_line(payload)
     # Stop Spark BEFORE printing so no shutdown log line can land after the
     # JSON line inside the driver's captured tail — but never let a shutdown
     # hiccup swallow the result line.

@@ -22,3 +22,14 @@ def spark():
 
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def batch_rows(batches) -> list[tuple]:
+    """Row tuples, in order, from what an ``arcane_ct`` read returns —
+    which must be Arrow record batches, never Python rows."""
+    import pyarrow as pa
+
+    batches = list(batches)
+    assert all(isinstance(b, pa.RecordBatch) for b in batches), batches
+    return [row for b in batches
+            for row in zip(*(col.to_pylist() for col in b.columns))]

@@ -138,3 +138,32 @@ def test_sub_placeholder_prefix_property():
         assert out == f"a={value}&b=@{long}&c={value}"
 
     check()
+
+
+def test_bench_line_fits_and_states_its_host():
+    """bench.py's printed line stays within the captured stdout window for
+    the whole catalog while carrying cpus/master/sf_dir: the fast tail of
+    ``queries`` is trimmed (and counted), never the summary fields."""
+    import json
+
+    import bench
+
+    n = 243
+    queries = {f"catalog_entry_with_a_long_name_{i:03d}": round(100.0 - i / 7, 3)
+               for i in range(n)}
+    payload = {
+        "metric": "catalog_total_runtime", "value": 1234.567, "unit": "sec",
+        "queries": queries, "sf": 0.1, "n_queries": n,
+        "full": "BENCH_FULL.json", "cpus": 4, "master": "local[4]",
+        "sf_dir": "/data/testdata/sf0.1",
+        "errors": {"broken_entry": "RuntimeError: " + "x" * 66},
+    }
+    line = bench.fit_line(payload)
+    assert len(line) <= bench.MAX_LINE
+    got = json.loads(line)
+    assert (got["cpus"], got["master"], got["sf_dir"]) == (
+        4, "local[4]", "/data/testdata/sf0.1")
+    assert got["value"] == 1234.567 and got["errors"] == payload["errors"]
+    kept = list(got["queries"])
+    assert kept == list(queries)[:len(kept)]  # slowest first, tail dropped
+    assert got["omitted_fast_queries"] == n - len(kept) > 0

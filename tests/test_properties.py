@@ -297,7 +297,7 @@ def test_gif_decode_never_crashes_on_mutation(pos, value, truncate):
     st.one_of(st.none(), st.integers(min_value=-5, max_value=45)),
 )
 def test_ct_feed_rows_version_bounds_property(versions, lo, hi):
-    """_feed_rows must return exactly the rows with lo < version <= hi
+    """_feed_batches must return exactly the rows with lo < version <= hi
     (hi=None: unbounded above) and report the feed-wide max version —
     the invariants Spark's commit-log resume and readBetweenOffsets
     replay are built on."""
@@ -306,7 +306,8 @@ def test_ct_feed_rows_version_bounds_property(versions, lo, hi):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from arcane_framework_spark.sources.ct_datasource import _feed_rows
+    from arcane_framework_spark.sources.ct_datasource import _feed_batches
+    from tests.conftest import batch_rows
 
     with tempfile.TemporaryDirectory() as feed:
         if versions:
@@ -317,15 +318,16 @@ def test_ct_feed_rows_version_bounds_property(versions, lo, hi):
                 }),
                 f"{feed}/b.parquet",
             )
-        rows, max_seen = _feed_rows(
-            feed, "SYS_CHANGE_VERSION", ["pk", "SYS_CHANGE_VERSION"],
+        batches, max_seen = _feed_batches(
+            feed, "SYS_CHANGE_VERSION",
+            pa.schema([("pk", pa.int64()), ("SYS_CHANGE_VERSION", pa.int64())]),
             lo, hi,
         )
         expect = sorted(
             (i, v) for i, v in enumerate(versions)
             if v > lo and (hi is None or v <= hi)
         )
-        assert sorted(rows) == expect
+        assert sorted(batch_rows(batches)) == expect
         assert max_seen == (max(versions) if versions else lo)
 
 

@@ -153,6 +153,16 @@ def test_stream_spec_rejects_zero_row_groups():
         StreamSpec.from_dict({"rowGroupsPerFile": 0})
 
 
+@pytest.mark.parametrize("seconds", [0, 0.0004, -1])
+def test_stream_spec_rejects_sub_millisecond_interval(seconds):
+    """A change-capture interval the millisecond trigger cannot express
+    fails when the spec is parsed, not when the stream starts."""
+    with pytest.raises(ValueError, match="changeCaptureIntervalSeconds"):
+        StreamSpec.from_dict({"changeCaptureIntervalSeconds": seconds})
+    spec = StreamSpec.from_dict({"changeCaptureIntervalSeconds": 0.5})
+    assert spec.change_capture_interval.total_seconds() == 0.5
+
+
 def test_scalar_converters():
     dt = parse_unix_millis(1700000000000)
     assert dt.year == 2023 and dt.tzinfo is not None

@@ -7,6 +7,7 @@ Mirrors the reference's mock-backed operator tests (SURVEY.md §5 categories
 import json
 import os
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -27,6 +28,15 @@ from arcane_framework_spark.sources.rest import (
     RestApiSource,
     TokenBucketRateLimiter,
 )
+from tests.conftest import batch_rows
+
+#: Arrow schema of the CT change feeds below (Spark: pk LONG,
+#: SYS_CHANGE_VERSION LONG, SYS_CHANGE_OPERATION STRING).
+CT_FEED_SCHEMA = pa.schema([
+    ("pk", pa.int64()),
+    ("SYS_CHANGE_VERSION", pa.int64()),
+    ("SYS_CHANGE_OPERATION", pa.string()),
+])
 
 # ---------------------------------------------------------------------------
 # CDM fixture
@@ -1799,8 +1809,8 @@ def test_ct_datasource_empty_tick_holds_offset(spark, tmp_path):
         schema, {"path": str(tmp_path / "nofeed"), "start_version": "0"}
     )
     assert reader.initialOffset() == {"version": 0}
-    rows, off = reader.read({"version": 0})
-    assert list(rows) == [] and off == {"version": 0}
+    batches, off = reader.read({"version": 0})
+    assert batch_rows(batches) == [] and off == {"version": 0}
 
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -1812,13 +1822,13 @@ def test_ct_datasource_empty_tick_holds_offset(spark, tmp_path):
                   "SYS_CHANGE_OPERATION": ["I", "U"]}),
         os.path.join(feed, "b.parquet"),
     )
-    rows, off = reader.read({"version": 0})
+    batches, off = reader.read({"version": 0})
     # version 0 is the backfill snapshot — already delivered, not re-read
-    assert list(rows) == [(2, 7, "U")]
+    assert batch_rows(batches) == [(2, 7, "U")]
     assert off == {"version": 7}
     # replay of the committed range is bounded on both sides
-    replay = list(reader.readBetweenOffsets({"version": 0}, {"version": 7}))
-    assert replay == [(2, 7, "U")]
+    replay = reader.readBetweenOffsets({"version": 0}, {"version": 7})
+    assert batch_rows(replay) == [(2, 7, "U")]
 
 
 def test_ct_datasource_stream_static_delta_join(spark, tmp_path):
@@ -1903,8 +1913,9 @@ def test_ct_feed_prunes_committed_files_via_footer_stats(tmp_path, monkeypatch):
     """Per-tick cost must be bounded by DELTA size, not feed age (the
     reference's CHANGETABLE scans are delta-bounded): files whose footer
     max(version) <= the committed watermark are skipped WITHOUT reading
-    their data pages. Proven by intercepting ParquetDataset and asserting
-    only the candidate files reach it."""
+    their data pages. Proven by spying on the data-page reads
+    (``ParquetFile.read``) and asserting only the candidate files reach
+    them."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -1929,20 +1940,23 @@ def test_ct_feed_prunes_committed_files_via_footer_stats(tmp_path, monkeypatch):
     write("b3.parquet", [8])            # the delta
 
     read_files = []
-    real_dataset = pq.ParquetDataset
 
-    def spy_dataset(files, *a, **kw):
-        read_files.extend(files)
-        return real_dataset(files, *a, **kw)
+    class SpyParquetFile(pq.ParquetFile):
+        def __init__(self, source, *a, **kw):
+            super().__init__(source, *a, **kw)
+            self.spy_source = source
 
-    monkeypatch.setattr(pq, "ParquetDataset", spy_dataset)
+        def read(self, *a, **kw):
+            read_files.append(self.spy_source)
+            return super().read(*a, **kw)
 
-    rows, max_seen = ct_datasource._feed_rows(
-        str(feed), "SYS_CHANGE_VERSION",
-        ["pk", "SYS_CHANGE_VERSION", "SYS_CHANGE_OPERATION"], 5, None,
+    monkeypatch.setattr(pq, "ParquetFile", SpyParquetFile)
+
+    batches, max_seen = ct_datasource._feed_batches(
+        str(feed), "SYS_CHANGE_VERSION", CT_FEED_SCHEMA, 5, None,
     )
     assert max_seen == 8  # watermark still sees the whole feed (footers)
-    assert sorted(r[1] for r in rows) == [6, 7, 8]
+    assert sorted(r[1] for r in batch_rows(batches)) == [6, 7, 8]
     # only the delta files were opened for data — history pruned by footer
     assert sorted(os.path.basename(f) for f in read_files) == [
         "b2.parquet", "b3.parquet",
@@ -1950,11 +1964,10 @@ def test_ct_feed_prunes_committed_files_via_footer_stats(tmp_path, monkeypatch):
 
     # bounded replay also prunes ABOVE the range
     read_files.clear()
-    replay, _ = ct_datasource._feed_rows(
-        str(feed), "SYS_CHANGE_VERSION",
-        ["pk", "SYS_CHANGE_VERSION", "SYS_CHANGE_OPERATION"], 3, 5,
+    replay, _ = ct_datasource._feed_batches(
+        str(feed), "SYS_CHANGE_VERSION", CT_FEED_SCHEMA, 3, 5,
     )
-    assert sorted(r[1] for r in replay) == [4, 5]
+    assert sorted(r[1] for r in batch_rows(replay)) == [4, 5]
     assert sorted(os.path.basename(f) for f in read_files) == ["b1.parquet"]
 
 
@@ -1965,7 +1978,7 @@ def test_ct_feed_tolerates_in_flight_file(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from arcane_framework_spark.sources.ct_datasource import _feed_rows
+    from arcane_framework_spark.sources.ct_datasource import _feed_batches
 
     feed = tmp_path / "feed"
     feed.mkdir()
@@ -1980,9 +1993,9 @@ def test_ct_feed_tolerates_in_flight_file(tmp_path):
     # an in-flight file: truncated garbage with the .parquet suffix
     (feed / "b1.parquet").write_bytes(b"PAR1\x00\x01\x02partial")
 
-    fields = ["pk", "SYS_CHANGE_VERSION", "SYS_CHANGE_OPERATION"]
-    rows, max_seen = _feed_rows(str(feed), "SYS_CHANGE_VERSION", fields, 0, None)
-    assert sorted(r[1] for r in rows) == [1, 2]
+    batches, max_seen = _feed_batches(
+        str(feed), "SYS_CHANGE_VERSION", CT_FEED_SCHEMA, 0, None)
+    assert sorted(r[1] for r in batch_rows(batches)) == [1, 2]
     assert max_seen == 2  # offset never advances past what was readable
 
     # the writer completes the file (feed contract: versions monotone
@@ -1995,8 +2008,9 @@ def test_ct_feed_tolerates_in_flight_file(tmp_path):
         }),
         str(feed / "b1.parquet"),
     )
-    rows, max_seen = _feed_rows(str(feed), "SYS_CHANGE_VERSION", fields, 2, None)
-    assert [r[1] for r in rows] == [3]
+    batches, max_seen = _feed_batches(
+        str(feed), "SYS_CHANGE_VERSION", CT_FEED_SCHEMA, 2, None)
+    assert [r[1] for r in batch_rows(batches)] == [3]
     assert max_seen == 3
 
 
@@ -2010,11 +2024,10 @@ def test_ct_feed_never_commits_past_in_flight_file(tmp_path):
     import pyarrow.parquet as pq
     import pytest
 
-    from arcane_framework_spark.sources.ct_datasource import _feed_rows
+    from arcane_framework_spark.sources.ct_datasource import _feed_batches
 
     feed = tmp_path / "feed"
     feed.mkdir()
-    fields = ["pk", "SYS_CHANGE_VERSION", "SYS_CHANGE_OPERATION"]
     pq.write_table(
         pa.table({"pk": [1], "SYS_CHANGE_VERSION": [1],
                   "SYS_CHANGE_OPERATION": ["I"]}),
@@ -2029,10 +2042,11 @@ def test_ct_feed_never_commits_past_in_flight_file(tmp_path):
         str(feed / "b2.parquet"),
     )
 
-    rows, max_seen = _feed_rows(str(feed), "SYS_CHANGE_VERSION", fields, 0, None)
+    batches, max_seen = _feed_batches(
+        str(feed), "SYS_CHANGE_VERSION", CT_FEED_SCHEMA, 0, None)
     # only the prefix before the in-flight file flows; the watermark does
     # NOT see b2's version 4 — committing 4 here would orphan b1 forever
-    assert [r[1] for r in rows] == [1]
+    assert [r[1] for r in batch_rows(batches)] == [1]
     assert max_seen == 1
 
     # writer A completes b1 — it lands ABOVE the committed offset
@@ -2041,15 +2055,295 @@ def test_ct_feed_never_commits_past_in_flight_file(tmp_path):
                   "SYS_CHANGE_OPERATION": ["I", "I"]}),
         str(feed / "b1.parquet"),
     )
-    rows, max_seen = _feed_rows(str(feed), "SYS_CHANGE_VERSION", fields, 1, None)
-    assert sorted(r[1] for r in rows) == [2, 3, 4]
+    batches, max_seen = _feed_batches(
+        str(feed), "SYS_CHANGE_VERSION", CT_FEED_SCHEMA, 1, None)
+    assert sorted(r[1] for r in batch_rows(batches)) == [2, 3, 4]
     assert max_seen == 4
 
     # the loud variant: a feed where truncation means corruption
     (feed / "b3.parquet").write_bytes(b"PAR1\x00garbage")
     with pytest.raises(Exception):
-        _feed_rows(str(feed), "SYS_CHANGE_VERSION", fields, 4, None,
-                   unreadable_policy="fail")
+        _feed_batches(str(feed), "SYS_CHANGE_VERSION", CT_FEED_SCHEMA, 4,
+                      None, unreadable_policy="fail")
+
+
+def test_ct_read_returns_arrow_batches_for_200k_delta(tmp_path):
+    """A large delta reaches Spark as Arrow record batches: the source never
+    turns the change rows into Python tuples."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from arcane_framework_spark.sources.ct_datasource import CtStreamReader
+
+    n = 200_000
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    pq.write_table(pa.table({
+        "pk": pa.array(range(n), pa.int64()),
+        "SYS_CHANGE_VERSION": pa.array([1 + i // 1000 for i in range(n)],
+                                       pa.int64()),
+        "SYS_CHANGE_OPERATION": pa.array(["U"] * n),
+    }), str(feed / "b0.parquet"), row_group_size=64_000)
+
+    schema = T.StructType([  # CT_FEED_SCHEMA, built without a session
+        T.StructField("pk", T.LongType()),
+        T.StructField("SYS_CHANGE_VERSION", T.LongType()),
+        T.StructField("SYS_CHANGE_OPERATION", T.StringType()),
+    ])
+    reader = CtStreamReader(schema, {"path": str(feed)})
+    batches, off = reader.read({"version": 0})
+    batches = list(batches)
+    assert batches and all(isinstance(b, pa.RecordBatch) for b in batches)
+    assert all(b.schema.equals(CT_FEED_SCHEMA) for b in batches)
+    assert sum(b.num_rows for b in batches) == n
+    assert off == {"version": 200}
+    replay = list(reader.readBetweenOffsets({"version": 0}, off))
+    assert all(isinstance(b, pa.RecordBatch) for b in replay)
+    assert sum(b.num_rows for b in replay) == n
+
+
+@pytest.mark.parametrize("write_statistics", [True, False])
+def test_ct_feed_straddling_file_yields_rows_above_lo(tmp_path,
+                                                      write_statistics):
+    """A file whose version range straddles the watermark (or a replay's
+    upper bound) contributes exactly its rows inside ``(lo, hi]``; NULL
+    versions never flow. Holds whether the range comes from footer
+    statistics or, without them, from reading the version column."""
+    import pyarrow.parquet as pq
+
+    from arcane_framework_spark.sources.ct_datasource import _feed_batches
+
+    feed = tmp_path / "feed"
+    feed.mkdir()
+
+    def write(name, versions):
+        pq.write_table(pa.table({
+            "pk": pa.array([10 * v if v else -1 for v in versions], pa.int64()),
+            "SYS_CHANGE_VERSION": pa.array(versions, pa.int64()),
+            "SYS_CHANGE_OPERATION": ["I"] * len(versions),
+        }), str(feed / name), write_statistics=write_statistics)
+
+    write("b0.parquet", [3, 4, 5, 6])     # straddles lo=4
+    write("b1.parquet", [7, None, 8])     # above lo, with a NULL version
+
+    batches, max_seen = _feed_batches(
+        str(feed), "SYS_CHANGE_VERSION", CT_FEED_SCHEMA, 4, None)
+    assert batch_rows(batches) == [
+        (50, 5, "I"), (60, 6, "I"), (70, 7, "I"), (80, 8, "I"),
+    ]
+    assert max_seen == 8
+
+    # straddles both ends of a bounded replay (3, 5]
+    replay, _ = _feed_batches(
+        str(feed), "SYS_CHANGE_VERSION", CT_FEED_SCHEMA, 3, 5)
+    assert batch_rows(replay) == [(40, 4, "I"), (50, 5, "I")]
+
+
+def test_ct_datasource_int32_feed_under_long_schema(spark, tmp_path):
+    """A feed written with int32 keys/versions, read under a LONG schema,
+    lands exact values end to end: each batch is cast to the schema's
+    Arrow types (Spark rejects an int32 column for a LONG field), and
+    files of different widths share one micro-batch."""
+    import pyarrow.parquet as pq
+
+    from arcane_framework_spark.sources.ct_datasource import CtDataSource
+    from arcane_framework_spark.streaming.runner import (
+        EXIT_SUCCESS,
+        StreamRunner,
+    )
+
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    big = 2**31 - 1  # int32 max: must not wrap on the way to LONG
+    pq.write_table(pa.table({
+        "pk": pa.array([1, big], pa.int32()),
+        "SYS_CHANGE_VERSION": pa.array([1, 2], pa.int32()),
+        "SYS_CHANGE_OPERATION": ["I", "U"],
+    }), str(feed / "b0.parquet"))
+    pq.write_table(pa.table({
+        "pk": pa.array([2**40], pa.int64()),
+        "SYS_CHANGE_VERSION": pa.array([3], pa.int64()),
+        "SYS_CHANGE_OPERATION": ["D"],
+    }), str(feed / "b1.parquet"))
+
+    spark.dataSource.register(CtDataSource)
+    changes = (
+        spark.readStream.format("arcane_ct")
+        .schema("pk LONG, SYS_CHANGE_VERSION LONG, SYS_CHANGE_OPERATION STRING")
+        .option("path", str(feed))
+        .load()
+    )
+    landed = []
+
+    def collect(df, batch_id):
+        landed.extend(tuple(r) for r in df.collect())
+
+    result = StreamRunner().run_stream(
+        changes, collect, str(tmp_path / "ckpt"), backfill=True)
+    assert result.exit_code == EXIT_SUCCESS, result.error
+    assert sorted(landed) == [
+        (1, 1, "I"), (big, 2, "U"), (2**40, 3, "D"),
+    ]
+
+
+def _write_timestamp_feed(feed):
+    """One CT file with nanosecond timestamps carrying sub-microsecond
+    digits (what pandas/pyarrow write by default): zone-less and zoned."""
+    import pyarrow.parquet as pq
+
+    wall = pa.array([1705320000123456789, 1721044800000000999, None],
+                    pa.timestamp("ns"))  # 2024-01-15/07-15 12:00 wall time
+    pq.write_table(pa.table({
+        "pk": pa.array([1, 2, 3], pa.int64()),
+        "SYS_CHANGE_VERSION": pa.array([1, 2, 3], pa.int64()),
+        "ts": wall,
+        "ts_zoned": wall.cast(pa.timestamp("ns", "Asia/Tokyo")),
+        "ts_ntz": wall,
+    }), str(feed / "b0.parquet"))
+
+
+@pytest.mark.parametrize("zone", ["UTC", "America/New_York"])
+def test_ct_feed_timestamps_convert_like_spark_rows(tmp_path, zone):
+    """Timestamp columns land as Spark's row conversion landed them:
+    truncated to microseconds, never rejected; a zone-less value under a
+    TIMESTAMP field is wall time in the runner's local zone (New York:
+    -05:00 in January, -04:00 in July); a zoned one keeps its instant; a
+    TIMESTAMP_NTZ field keeps the wall time."""
+    import time
+    from datetime import datetime, timezone
+
+    from arcane_framework_spark.sources.ct_datasource import _feed_batches
+
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    _write_timestamp_feed(feed)
+    schema = pa.schema([
+        ("pk", pa.int64()),
+        ("SYS_CHANGE_VERSION", pa.int64()),
+        ("ts", pa.timestamp("us", "UTC")),
+        ("ts_zoned", pa.timestamp("us", "UTC")),
+        ("ts_ntz", pa.timestamp("us")),
+    ])
+    saved = os.environ.get("TZ")
+    os.environ["TZ"] = zone
+    time.tzset()
+    try:
+        batches, max_seen = _feed_batches(
+            str(feed), "SYS_CHANGE_VERSION", schema, 0, None)
+    finally:
+        if saved is None:
+            os.environ.pop("TZ")
+        else:
+            os.environ["TZ"] = saved
+        time.tzset()
+
+    utc = timezone.utc
+    jan, jul = ((5, 4) if zone == "America/New_York" else (0, 0))
+    assert batches[0].schema.equals(schema)
+    assert max_seen == 3
+    assert batch_rows(batches) == [
+        (1, 1, datetime(2024, 1, 15, 12 + jan, 0, 0, 123456, utc),
+         datetime(2024, 1, 15, 12, 0, 0, 123456, utc),
+         datetime(2024, 1, 15, 12, 0, 0, 123456)),
+        (2, 2, datetime(2024, 7, 15, 12 + jul, tzinfo=utc),
+         datetime(2024, 7, 15, 12, tzinfo=utc), datetime(2024, 7, 15, 12)),
+        (3, 3, None, None, None),
+    ]
+
+
+def test_ct_datasource_ns_timestamp_feed_lands_truncated(spark, tmp_path):
+    """End to end, nanosecond timestamps under TIMESTAMP and TIMESTAMP_NTZ
+    fields land truncated to microseconds; the stream moves past the file
+    instead of failing every tick on a lossy cast."""
+    from datetime import datetime, timezone
+
+    from arcane_framework_spark.sources.ct_datasource import CtDataSource
+    from arcane_framework_spark.streaming.runner import (
+        EXIT_SUCCESS,
+        StreamRunner,
+    )
+
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    _write_timestamp_feed(feed)
+    spark.dataSource.register(CtDataSource)
+    changes = (
+        spark.readStream.format("arcane_ct")
+        .schema("pk LONG, SYS_CHANGE_VERSION LONG, ts TIMESTAMP, "
+                "ts_zoned TIMESTAMP, ts_ntz TIMESTAMP_NTZ")
+        .option("path", str(feed))
+        .load()
+        .select("pk", F.unix_micros("ts"), F.unix_micros("ts_zoned"),
+                F.col("ts_ntz").cast("string"))
+    )
+    landed = []
+
+    def collect(df, batch_id):
+        landed.extend(tuple(r) for r in df.collect())
+
+    result = StreamRunner().run_stream(
+        changes, collect, str(tmp_path / "ckpt"), backfill=True)
+    assert result.exit_code == EXIT_SUCCESS, result.error
+
+    def micros(dt):  # epoch micros of an aware datetime, exactly
+        return (dt - datetime(1970, 1, 1, tzinfo=timezone.utc)) // (
+            datetime.resolution)
+
+    jan = datetime(2024, 1, 15, 12, 0, 0, 123456)
+    jul = datetime(2024, 7, 15, 12)
+    assert sorted(landed, key=lambda r: r[0]) == [
+        (1, micros(jan.astimezone(timezone.utc)),
+         micros(jan.replace(tzinfo=timezone.utc)), "2024-01-15 12:00:00.123456"),
+        (2, micros(jul.astimezone(timezone.utc)),
+         micros(jul.replace(tzinfo=timezone.utc)), "2024-07-15 12:00:00"),
+        (3, None, None, None),
+    ]
+
+
+def test_ct_runner_import_set_stays_lean(tmp_path):
+    """Spark starts a fresh Python source runner per query start, so what
+    ``arcane_ct`` imports is paid on every tick: importing the module and
+    reading a one-file delta must not load pandas, ``pyarrow.dataset``
+    (which imports pandas) or the REST/CDM sources."""
+    import subprocess
+    import sys
+
+    import pyarrow.parquet as pq
+
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    pq.write_table(pa.table({
+        "pk": pa.array([1, 2], pa.int64()),
+        "SYS_CHANGE_VERSION": pa.array([1, 2], pa.int64()),
+        "SYS_CHANGE_OPERATION": ["I", "U"],
+    }), str(feed / "b0.parquet"))
+    script = f"""
+import json, sys
+from pyspark.sql import types as T
+from arcane_framework_spark.sources.ct_datasource import CtStreamReader
+schema = T.StructType([
+    T.StructField("pk", T.LongType()),
+    T.StructField("SYS_CHANGE_VERSION", T.LongType()),
+    T.StructField("SYS_CHANGE_OPERATION", T.StringType()),
+])
+batches, off = CtStreamReader(schema, {{"path": {str(feed)!r}}}).read(
+    {{"version": 0}})
+print(json.dumps({{
+    "rows": sum(b.num_rows for b in batches),
+    "offset": off,
+    "loaded": sorted(m for m in (
+        "pandas", "pyarrow.dataset",
+        "arcane_framework_spark.sources.rest",
+        "arcane_framework_spark.sources.cdm",
+    ) if m in sys.modules),
+}}))
+"""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", script], cwd=repo,
+                         capture_output=True, text=True, timeout=120,
+                         check=True)
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got == {"rows": 2, "offset": {"version": 2}, "loaded": []}
 
 
 def test_page_resolver_from_config_all_types():

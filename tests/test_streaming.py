@@ -235,6 +235,70 @@ def test_cdm_schema_drift_restart_choreography_end_to_end(spark, tmp_path):
     assert by_id[101].EXTRA is None  # pre-drift rows align under new schema
 
 
+class _FakeStream:
+    """Stands in for a streaming DataFrame and its writer: records the
+    trigger ``run_stream`` asks for, and the query ends at once."""
+
+    def __init__(self):
+        self.writeStream = self
+        self.trigger_kwargs = None
+
+    def foreachBatch(self, fn):  # noqa: N802 (Spark API)
+        return self
+
+    def option(self, key, value):
+        return self
+
+    def trigger(self, **kwargs):
+        self.trigger_kwargs = kwargs
+        return self
+
+    def start(self):
+        return self
+
+    def awaitTermination(self):  # noqa: N802 (Spark API)
+        pass
+
+
+def test_run_stream_trigger_interval_milliseconds(spark):
+    """Stream mode's processingTime keeps sub-second intervals (0.5 s used
+    to truncate to "0 seconds", a busy poll) and the 15 s default applies
+    only when no interval is given; a non-positive or sub-millisecond
+    interval is refused before any query starts (timedelta(0) used to
+    fall through to 15 s)."""
+    from datetime import timedelta
+
+    import pytest
+
+    jvm_trigger = spark._jvm.org.apache.spark.sql.streaming.Trigger
+    for interval, expect_ms in [(timedelta(milliseconds=500), 500),
+                                (timedelta(seconds=2.25), 2250),
+                                (None, 15000)]:
+        fake = _FakeStream()
+        result = StreamRunner().run_stream(
+            fake, lambda df, i: None, "unused-ckpt",
+            trigger_interval=interval,
+        )
+        assert result.exit_code == EXIT_SUCCESS
+        processing_time = fake.trigger_kwargs["processingTime"]
+        # Spark reads the string as the intended interval
+        assert jvm_trigger.ProcessingTime(processing_time).intervalMs() \
+            == expect_ms
+
+    fake = _FakeStream()
+    StreamRunner().run_stream(fake, lambda df, i: None, "unused-ckpt",
+                              backfill=True)
+    assert fake.trigger_kwargs == {"availableNow": True}
+
+    for bad in (timedelta(0), timedelta(seconds=-1),
+                timedelta(microseconds=500)):
+        fake = _FakeStream()
+        with pytest.raises(ValueError, match="at least 1 millisecond"):
+            StreamRunner().run_stream(fake, lambda df, i: None,
+                                      "unused-ckpt", trigger_interval=bad)
+        assert fake.trigger_kwargs is None
+
+
 # ---------------------------------------------------------------------------
 # Stateful streaming operators (T7/T8 extensions)
 # ---------------------------------------------------------------------------

@@ -48,7 +48,9 @@ def main() -> int:
         print(f"unknown queries: {unknown}", file=sys.stderr)
         return 2
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # unset: the host's core count, not a fixed local[32] that oversubscribes
+    # a small host
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     spark = get_spark("profile-queries", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -56,7 +58,7 @@ def main() -> int:
     try:
         QUERIES["q1_pricing_summary"](spark, args.sf_dir).write.format(
             "noop").mode("overwrite").save()
-        warm_df = spark.range(0, 256, 1, int(cpus))
+        warm_df = spark.range(0, 256, 1, cpus)
         warm_df.mapInPandas(lambda it: it, warm_df.schema).write.format(
             "noop").mode("overwrite").save()
     except Exception:
